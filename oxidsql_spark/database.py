@@ -208,11 +208,16 @@ class OxidSparkDatabase:
 
     def __init__(self, spark: SparkSession, storage_dir: str | None = None):
         """In-memory by default (temp views). With ``storage_dir``, every
-        table is backed by a snapshot-versioned parquet directory
-        (versioned.VersionedTable): mutations commit durable snapshots,
-        and a new OxidSparkDatabase on the same directory sees every
-        table — the rebuild's twin of the reference's disk persistence
-        (its buffer-managed segment files, src/storage/disk.rs)."""
+        table is backed by a versioned parquet directory
+        (versioned.VersionedTable), and a new OxidSparkDatabase on the
+        same directory sees every table — the rebuild's twin of the
+        reference's disk persistence (its buffer-managed segment files,
+        src/storage/disk.rs).  Every statement commits one version:
+        INSERT … VALUES rewrites the table's small tail file on the
+        driver (no Spark job, bytes independent of the table size — the
+        reference adds a tuple to a heap page), INSERT … SELECT and COPY
+        FROM append one Spark write of only the incoming rows, and
+        UPDATE/DELETE/MERGE/CTAS/ALTER/OPTIMIZE write a full snapshot."""
         import json
 
         self.spark = spark
@@ -325,12 +330,27 @@ class OxidSparkDatabase:
     def _commit(self, name: str, df: DataFrame) -> None:
         """Publish a table's new content: durable snapshot when backed by
         storage (readers of older versions are unaffected), else a temp
-        view swap. Commits reset the single-row insert buffer: the
-        committed plan becomes the new base the buffer unions onto."""
+        view swap."""
         if self.storage_dir:
             vt = self._vt(name)
             vt.write(df)
             df = vt.read()
+        self._publish(name, df)
+
+    def _append(self, name: str, rows: DataFrame) -> None:
+        """Publish the table plus ``rows`` (the table's column types, in
+        order): an append commit that writes only ``rows`` when backed
+        by storage, else a temp view swap."""
+        if self.storage_dir:
+            vt = self._vt(name)
+            vt.append(rows)
+            self._publish(name, vt.read())
+        else:
+            self._publish(name, self.spark.table(name).union(rows))
+
+    def _publish(self, name: str, df: DataFrame) -> None:
+        """Swap the table's view to ``df``. Resets the single-row insert
+        buffer: the committed plan becomes the new base it unions onto."""
         df.createOrReplaceTempView(name)
         self._view_base[name] = df
         self._row_buf[name] = []
@@ -630,7 +650,7 @@ class OxidSparkDatabase:
         if viol is not None:
             return viol  # table untouched; the report IS the result
         n = aligned.count()
-        self._commit(name, cur.unionByName(aligned))
+        self._append(name, aligned)
         if name in self._stats:
             self._stats[name].update(aligned)
             self._save_stats(name)
@@ -732,7 +752,7 @@ class OxidSparkDatabase:
             n_dead = self.spark.read.parquet(dl_path).count()
             n_good = good.count()
             if n_good:
-                self._commit(name, cur.unionByName(good))
+                self._append(name, good)
                 if name in self._stats:
                     self._stats[name].update(good)
                     self._save_stats(name)
@@ -750,38 +770,30 @@ class OxidSparkDatabase:
 
     def _optimize(self, m: "re.Match[str]") -> DataFrame:
         """OPTIMIZE t [ZORDER BY (c1, c2)] — Delta's maintenance verb
-        over the versioned backend: rewrite the CURRENT snapshot's
-        content compacted to ~128 MB files (and Morton-clustered when
-        ZORDER BY is given) as the NEXT version.  Content is untouched
-        (stats stay valid, time travel keeps the old layout), the
-        _SUCCESS marker is the commit, and concurrent readers of prior
-        versions never see a half-rewrite — the facade twin of
-        ``sinks.optimize_zordered``.  Returns one metrics row."""
+        over the versioned backend: rewrite the CURRENT version's whole
+        file set (base files and tail alike) compacted to ~128 MB files
+        (and Morton-clustered when ZORDER BY is given) as the NEXT
+        version, a full snapshot.  Content is untouched (stats stay
+        valid, time travel keeps the old layout), the _SUCCESS marker is
+        the commit, and concurrent readers of prior versions never see
+        a half-rewrite — the facade twin of ``sinks.optimize_zordered``.
+        Returns one metrics row."""
         import math
 
-        from .sinks import write_zordered
+        from .sinks import zorder_layout
 
         name = m.group(1).lower()
         vt = self._require_versioned(name)
         zcols = [c.strip() for c in m.group(2).split(",")] if m.group(2) else []
         df = vt.read()
-        cur = vt._vdir(vt.latest_version())
-        nbytes = sum(
-            e.stat().st_size
-            for e in os.scandir(cur)
-            if e.name.endswith(".parquet")
-        )
+        nbytes = sum(os.path.getsize(f) for f in vt.files())
         n_files = max(1, math.ceil(nbytes / (128 * 1024 * 1024)))
-        next_v = vt.latest_version() + 1
-        out = vt._vdir(next_v)
         if zcols:
-            write_zordered(df, out, *zcols, n_files=n_files, mode="errorifexists")
+            df = zorder_layout(df, *zcols, n_files=n_files)
         else:
-            df.repartition(n_files).write.mode("errorifexists").parquet(out)
-        live = vt.read()
-        live.createOrReplaceTempView(name)
-        self._view_base[name] = live
-        self._row_buf[name] = []
+            df = df.repartition(n_files)
+        next_v = vt.write(df)
+        self._publish(name, vt.read())
         return self.spark.createDataFrame(
             [(next_v, n_files, ",".join(zcols))],
             "version int, n_files int, zorder_by string",
@@ -1216,10 +1228,12 @@ class OxidSparkDatabase:
 
     def _describe_history(self, name: str) -> DataFrame:
         """DESCRIBE HISTORY t (Delta's spelling) for a durable versioned
-        table: one row per committed snapshot — version, file count,
-        byte size, and commit time (the _SUCCESS marker's mtime, i.e.
-        the moment the snapshot became visible).  The audit surface for
-        the snapshot model SHOW VERSIONS only lists ids for."""
+        table: one row per committed version — version, the file count
+        and byte size of the whole file set it reads (files referenced
+        from parent versions included), and commit time (the _SUCCESS
+        marker's mtime, i.e. the moment the version became visible).
+        The audit surface for the version model SHOW VERSIONS only lists
+        ids for."""
         import datetime as _dt
 
         if name in self._matviews:
@@ -1232,10 +1246,9 @@ class OxidSparkDatabase:
             vt = self._vt(name)
         rows = []
         for v in vt.versions():
-            vdir = vt._vdir(v)
-            files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
-            nbytes = sum(os.path.getsize(os.path.join(vdir, f)) for f in files)
-            ts = os.path.getmtime(os.path.join(vdir, "_SUCCESS"))
+            files = vt.files(v)
+            nbytes = sum(os.path.getsize(f) for f in files)
+            ts = os.path.getmtime(os.path.join(vt._vdir(v), "_SUCCESS"))
             rows.append(
                 (
                     v,
@@ -1546,10 +1559,11 @@ class OxidSparkDatabase:
                 t: self._convert(lit, by_name[t]) for lit, t in zip(literals, targets)
             }
             rows.append(tuple(vals.get(c.name) for c in specs))
-        schema = T.StructType([T.StructField(c.name, c.spark_type, True) for c in specs])
         if self.storage_dir:
-            new = self.spark.createDataFrame(rows, schema)
-            self._commit(name, self.spark.table(name).union(new))
+            # driver-written tail commit: zero Spark jobs, O(tail) bytes
+            vt = self._vt(name)
+            vt.append_rows(rows)
+            self._publish(name, vt.read())
         else:
             # buffered path: the view is always base ∪ one local batch of
             # every buffered row — the plan stays 2 nodes deep no matter
@@ -1558,6 +1572,9 @@ class OxidSparkDatabase:
             buf = self._row_buf.setdefault(name, [])
             buf.extend(rows)
             base = self._view_base[name]
+            schema = T.StructType(
+                [T.StructField(c.name, c.spark_type, True) for c in specs]
+            )
             batch = self.spark.createDataFrame(buf, schema)
             base.union(batch).createOrReplaceTempView(name)
         # online stats: the inserted rows are driver-known — buffered
@@ -1636,7 +1653,7 @@ class OxidSparkDatabase:
             )
             if viol is not None:
                 return viol  # table untouched; the report IS the result
-        self._commit(name, self.spark.table(name).union(cast))
+        self._append(name, cast)
         self._stats[name].update(cast)
         self._save_stats(name)
         return None

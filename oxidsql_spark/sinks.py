@@ -306,6 +306,11 @@ def write_zordered(
     n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
+    """Write ``zorder_layout(df, *z_cols, n_files=n_files)`` to ``path``."""
+    zorder_layout(df, *z_cols, n_files=n_files).write.mode(mode).parquet(path)
+
+
+def zorder_layout(df: DataFrame, *z_cols: str, n_files: int | None = None) -> DataFrame:
     """Multi-dimensional data-skipping layout: Z-order (Morton)
     clustering on up to 3 columns.
 
@@ -350,10 +355,9 @@ def write_zordered(
             )
     zk = "__zorder_key"
     n = n_files or df.rdd.getNumPartitions()
-    out = (
+    return (
         df.withColumn(zk, z)
         .repartitionByRange(n, F.col(zk))
         .sortWithinPartitions(zk)
         .drop(zk)
     )
-    out.write.mode(mode).parquet(path)

@@ -144,8 +144,9 @@ class CountingHLL:
     (bucket, rho), so delete = decrement and the register value is the
     largest rho with a nonzero counter. The reference squeezes counters
     into probabilistic u8s to fit 3,776 B/column (…:36-37); we keep
-    exact int64 counters — the matrix is a few hundred KB driver-side,
-    and the probabilistic counter is a memory trick, not a semantic one.
+    exact int64 counters — the matrix is a few hundred KB driver-side
+    (``OnlineTableStats.dumps`` stores it trimmed and narrowed), and the
+    probabilistic counter is a memory trick, not a semantic one.
 
     The per-value hashing/counting runs IN SPARK (see
     ``column_bucket_rho_counts``): at most m×max_rho groups survive
@@ -322,17 +323,27 @@ class OnlineTableStats:
         """Serialize the full stats state (counter matrices, sample,
         pending rows) — the twin of the reference persisting its sketch
         blobs into catalog VarBinary columns (catalog/mod.rs:574-577).
-        A few hundred KB per table regardless of table size."""
+        Each counter matrix is stored without its all-zero trailing rho
+        columns (a bucket's largest rho is about log2 of its value count)
+        and in the smallest unsigned integer type that holds its largest
+        count, so a table's blob stays a few hundred KB at most."""
         import pickle
 
+        import numpy as np
+
+        sketches = {}
+        for c, sk in self._sketches.items():
+            used = np.flatnonzero(sk._counts.any(axis=0))
+            width = int(used[-1]) + 1 if used.size else 0
+            counts = sk._counts[:, :width]
+            dtype = np.min_scalar_type(int(counts.max(initial=0)))
+            sketches[c] = (sk.m, width, dtype.str, counts.astype(dtype).tobytes())
         return pickle.dumps(
             {
                 "rowcount": self.rowcount,
                 "seq": self._seq,
                 "sample_size": self.sample_size,
-                "sketches": {
-                    c: (sk.m, sk._counts.tobytes()) for c, sk in self._sketches.items()
-                },
+                "sketches": sketches,
                 "sample": self._sample,
                 "pending": self._pending,
             }
@@ -341,7 +352,8 @@ class OnlineTableStats:
     @classmethod
     def loads(cls, spark: SparkSession, schema, data: bytes) -> "OnlineTableStats":
         """Restore from ``dumps`` output — reopening a durable database
-        recovers fresh statistics with NO table rescan."""
+        recovers fresh statistics with NO table rescan.  Also reads the
+        older blobs that stored each full int64 matrix as ``(m, raw)``."""
         import pickle
 
         import numpy as np
@@ -352,11 +364,13 @@ class OnlineTableStats:
         self._seq = st["seq"]
         self._sample = [tuple(x) if not isinstance(x, tuple) else x for x in st["sample"]]
         self._pending = st["pending"]
-        for c, (m, raw) in st["sketches"].items():
-            sk = CountingHLL(m)
-            sk._counts = np.frombuffer(raw, dtype=np.int64).reshape(
-                (m, sk.max_rho + 1)
-            ).copy()
+        for c, packed in st["sketches"].items():
+            sk = CountingHLL(packed[0])
+            if len(packed) == 2:
+                m, width, dtype, raw = packed[0], sk.max_rho + 1, np.int64, packed[1]
+            else:
+                m, width, dtype, raw = packed
+            sk._counts[:, :width] = np.frombuffer(raw, dtype=dtype).reshape((m, width))
             self._sketches[c] = sk
         return self
 

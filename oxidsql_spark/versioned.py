@@ -1,40 +1,88 @@
-"""Snapshot-versioned parquet tables: time travel, rollback, upsert.
+"""Snapshot-versioned parquet tables: time travel, rollback, upsert, and
+appends that write only the new rows.
 
 The reference has no UPDATE/DELETE at all (README.md:51 TODO) and the
 facade's rewrites swap temp views — interactive parity only. This module
 is the production shape for mutating plain-parquet data at scale, the
 same immutable-snapshot model Delta/Iceberg formalize:
 
-* every mutation writes a NEW complete snapshot directory
-  (`_v00000001/…`) and never touches prior ones — readers are isolated
-  from writers for free;
-* commit = the atomic appearance of the snapshot's `_SUCCESS` marker
-  (written last); a crashed writer leaves an uncommitted directory that
-  readers skip and `vacuum` removes;
-* time travel = read an older snapshot; rollback = write the old
-  snapshot's content as a new version (history stays linear).
+* every commit writes the NEXT version directory (`_v00000001/…`) and
+  never touches prior ones — readers are isolated from writers for free;
+* a version is a manifest (`_manifest.json`: its data file list and
+  the Spark schema) over immutable parquet files.  A full snapshot
+  (`write`) lists only the files in its own directory; an append
+  (`append`, `append_rows`) lists its parent's files plus the few it
+  wrote, so an INSERT costs O(delta) bytes instead of a table copy;
+* driver-known rows (INSERT … VALUES) land in a TAIL file the driver
+  rewrites with pyarrow — parent tail + new rows, no Spark job.  Once
+  the tail reaches ``spark.sql.files.maxPartitionBytes`` it becomes an
+  ordinary base file and the next append starts a new tail, so a read
+  is always the base files + at most one tail;
+* commit = the atomic appearance of the version's `_SUCCESS` marker,
+  written last (after the data files and the manifest); a crashed
+  writer leaves an uncommitted directory that readers skip, the retry
+  clears and `vacuum` removes;
+* reads hand the manifest schema to the parquet reader, so no commit,
+  reopen or time-travel read pays a schema-inference job;
+* time travel = read an older manifest; rollback = write the old
+  version's content as a new full snapshot (history stays linear);
+  `vacuum` retires old versions but never deletes a file a retained
+  version still references.
 
-At 100 TB a full-snapshot copy per mutation is the right baseline for
-small dimension tables; fact tables would layer partition-scoped
-snapshots (only rewritten partitions advance) — same commit protocol.
+Directories written before manifests existed (plain `_v` dirs holding
+a whole snapshot, no `_manifest.json`) still read and vacuum as before;
+the first append on top of one references its files from a manifest.
+
+UPDATE/DELETE/MERGE and rollback write full snapshots.  At 100 TB a
+fact table would rewrite only the files a mutation touches (copy-on-
+write over the same manifests), or layer partition-scoped snapshots
+(`PartitionedVersionedTable`) — same commit protocol.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _VERSION_RE = re.compile(r"^_v(\d{8})$")
+_MANIFEST = "_manifest.json"
+# Spark's file committer would write _SUCCESS at job end, before the
+# manifest exists; a versioned commit writes the marker itself, last
+_NO_SPARK_MARKER = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 # Manifest bucket for rows whose partition value is NULL (Hive's name).
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
+def _data_files(d: str) -> list[str]:
+    """Parquet data files directly in ``d`` (Spark's hidden-file rule)."""
+    return sorted(
+        f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _refs(manifest: dict) -> list[str]:
+    """Every data file a manifest reads, relative to the table dir."""
+    return manifest["files"] + ([manifest["tail"]] if manifest["tail"] else [])
+
+
+def _arrow_values(values, dtype: T.DataType):
+    """Python values as pyarrow takes them, with Spark's meaning: a naive
+    datetime in a TIMESTAMP column is local wall time (as in
+    ``createDataFrame``), not UTC."""
+    if isinstance(dtype, T.TimestampType):
+        return [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
+    return values
+
+
 class VersionedTable:
-    """A directory of immutable parquet snapshots with atomic commits."""
+    """A directory of immutable parquet versions with atomic commits."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -59,26 +107,137 @@ class VersionedTable:
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"_v{version:08d}")
 
+    def _committed(self, version: int | None) -> int:
+        v = version if version is not None else self.latest_version()
+        if v is None or v not in self.versions():
+            raise ValueError(f"no committed version {version!r} at {self.path}")
+        return v
+
+    def _manifest(self, version: int) -> dict:
+        """``files`` (base data files, relative to the table dir),
+        ``tail`` (the driver-written tail file or None) and ``schema``
+        (Spark schema JSON).  A version without a manifest file (the
+        pre-manifest layout) is its own directory's files with an
+        unknown schema."""
+        vdir = self._vdir(version)
+        try:
+            with open(os.path.join(vdir, _MANIFEST)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            name = os.path.basename(vdir)
+            files = [f"{name}/{f}" for f in _data_files(vdir)]
+            return {"files": files, "tail": None, "schema": None}
+
+    def _schema(self, version: int, manifest: dict) -> T.StructType:
+        if manifest["schema"] is None:  # pre-manifest layout: infer once
+            return self.spark.read.parquet(self._vdir(version)).schema
+        return T.StructType.fromJson(manifest["schema"])
+
+    def files(self, version: int | None = None) -> list[str]:
+        """Absolute paths of every data file a version reads — its whole
+        file set, including files referenced from parent versions."""
+        return self._paths(self._manifest(self._committed(version)))
+
+    def _paths(self, manifest: dict) -> list[str]:
+        return [os.path.join(self.path, r) for r in _refs(manifest)]
+
     # -- write side ------------------------------------------------------
 
-    def write(self, df: DataFrame) -> int:
-        """Commit `df` as the next snapshot; returns its version number.
-        The parquet job writes _SUCCESS last, so a crash mid-write leaves
-        an invisible (uncommitted) directory, never a torn table.  A
-        RETRY after such a crash finds that uncommitted directory at its
+    def _next(self) -> tuple[int, str]:
+        """The next version number and its directory.  A RETRY after a
+        crash finds the crashed attempt's uncommitted directory at its
         own target version and clears it first — only _SUCCESS-bearing
-        dirs are commits, so an uncommitted dir is always safe debris
-        (without this, the errorifexists write would fail permanently
-        and e.g. a replayed streaming refresh could never make
-        progress)."""
-        import shutil
-
+        dirs are commits, and nothing references files of a version
+        that never committed, so it is always safe debris (without
+        this, the errorifexists write would fail permanently and e.g.
+        a replayed streaming refresh could never make progress)."""
         next_v = (self.latest_version() or 0) + 1
         vdir = self._vdir(next_v)
-        if os.path.isdir(vdir):  # crashed (uncommitted) attempt's debris
+        if os.path.isdir(vdir):
             shutil.rmtree(vdir)
-        df.write.mode("errorifexists").parquet(vdir)
-        return next_v
+        return next_v, vdir
+
+    def _spark_write(self, df: DataFrame, vdir: str) -> list[str]:
+        """One Spark write of ``df`` into ``vdir`` with no _SUCCESS;
+        returns the written files relative to the table dir."""
+        df.write.options(**_NO_SPARK_MARKER).mode("errorifexists").parquet(vdir)
+        name = os.path.basename(vdir)
+        return [f"{name}/{f}" for f in _data_files(vdir)]
+
+    def _seal(self, version: int, files: list[str], tail: str | None, schema) -> int:
+        """Commit: the manifest, then _SUCCESS — the commit point, last."""
+        vdir = self._vdir(version)
+        with open(os.path.join(vdir, _MANIFEST), "w") as fh:
+            json.dump({"files": files, "tail": tail, "schema": schema.jsonValue()}, fh)
+        open(os.path.join(vdir, "_SUCCESS"), "w").close()
+        return version
+
+    def write(self, df: DataFrame) -> int:
+        """Commit `df` as the next full snapshot; returns its version
+        number.  A crash mid-write leaves an invisible (uncommitted)
+        directory, never a torn table."""
+        v, vdir = self._next()
+        return self._seal(v, self._spark_write(df, vdir), None, df.schema)
+
+    def append(self, df: DataFrame) -> int:
+        """Commit the latest version plus `df`'s rows: one Spark write of
+        only the incoming rows; the new manifest references every parent
+        file (tail included) plus the new ones.  Columns match by
+        position, as in UNION; their types must equal the table's."""
+        latest = self.latest_version()
+        if latest is None:
+            return self.write(df)
+        parent = self._manifest(latest)
+        schema = self._schema(latest, parent)
+        types = [f.dataType.simpleString() for f in schema]
+        if [f.dataType.simpleString() for f in df.schema] != types:
+            raise ValueError(
+                f"append of {df.schema.simpleString()} into {schema.simpleString()}"
+            )
+        v, vdir = self._next()
+        new = self._spark_write(df.toDF(*schema.names), vdir)
+        return self._seal(v, parent["files"] + new, parent["tail"], schema)
+
+    def append_rows(self, rows: list[tuple]) -> int:
+        """Commit the latest version plus driver-known `rows` (tuples in
+        column order, holding the Python values ``createDataFrame``
+        takes) with NO Spark job: the driver rewrites the tail — the
+        parent's tail rows plus `rows` — with pyarrow into the next
+        version dir, and the manifest carries every base file over by
+        reference.  Bytes written are O(tail + rows), independent of
+        the table size.  A tail that reaches
+        ``spark.sql.files.maxPartitionBytes`` rolls into a base file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        latest = self.latest_version()
+        if latest is None:
+            raise ValueError(f"append_rows into {self.path} before its first write")
+        parent = self._manifest(latest)
+        schema = self._schema(latest, parent)
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+        batch = pa.Table.from_arrays(
+            [
+                pa.array(_arrow_values(c, f.dataType), type=a.type)
+                for c, f, a in zip(cols, schema.fields, arrow_schema)
+            ],
+            schema=arrow_schema,
+        )
+        if parent["tail"]:
+            old = pq.read_table(os.path.join(self.path, parent["tail"]), schema=arrow_schema)
+            batch = pa.concat_tables([old, batch])
+        v, vdir = self._next()
+        os.makedirs(vdir)
+        tail = f"{os.path.basename(vdir)}/tail.parquet"
+        # zstd, the codec the engine's session writes parquet with
+        pq.write_table(batch, os.path.join(self.path, tail), compression="zstd")
+        files = parent["files"]
+        roll_at = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        if os.path.getsize(os.path.join(self.path, tail)) >= roll_at:
+            files, tail = files + [tail], None
+        return self._seal(v, files, tail, schema)
 
     def upsert(self, updates: DataFrame, key: str) -> int:
         """MERGE-style upsert as a snapshot: surviving old rows UNION
@@ -101,12 +260,14 @@ class VersionedTable:
         return self.write(self.read(version))
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop all but the newest `keep_last` committed snapshots plus
-        any uncommitted (crashed) directories. Returns removed versions.
+        """Drop all but the newest `keep_last` committed versions plus
+        any uncommitted (crashed) directories; returns the removed
+        versions.  A file that a retained version references (appends
+        point into their parents' dirs) is never deleted: a removed
+        version loses its _SUCCESS marker first — it is no longer a
+        version — and its directory keeps only such files.
         ``keep_last`` must be >= 1 — keep_last=0 would delete every
         committed snapshot (total table loss)."""
-        import shutil
-
         if keep_last < 1:
             raise ValueError(
                 f"vacuum(keep_last={keep_last}): must keep at least the "
@@ -114,22 +275,37 @@ class VersionedTable:
             )
         committed = self.versions()
         removed = committed[:-keep_last]
+        live = {r for v in committed[-keep_last:] for r in _refs(self._manifest(v))}
         for v in removed:
-            shutil.rmtree(self._vdir(v))
+            os.remove(os.path.join(self._vdir(v), "_SUCCESS"))
         for name in os.listdir(self.path):
-            m = _VERSION_RE.match(name)
-            if m and not os.path.exists(os.path.join(self.path, name, "_SUCCESS")):
-                shutil.rmtree(os.path.join(self.path, name))
+            d = os.path.join(self.path, name)
+            if not _VERSION_RE.match(name) or os.path.exists(os.path.join(d, "_SUCCESS")):
+                continue
+            for f in os.listdir(d):
+                if f"{name}/{f}" in live:
+                    continue
+                p = os.path.join(d, f)
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
+            if not os.listdir(d):
+                os.rmdir(d)
         return removed
 
     # -- read side -------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Latest committed snapshot, or time-travel to `version`."""
-        v = version if version is not None else self.latest_version()
-        if v is None or v not in self.versions():
-            raise ValueError(f"no committed version {version!r} at {self.path}")
-        return self.spark.read.parquet(self._vdir(v))
+        """Latest committed version, or time-travel to `version`: one
+        parquet scan over the manifest's files with its schema — no
+        inference job.  A pre-manifest version reads its directory."""
+        v = self._committed(version)
+        m = self._manifest(v)
+        if m["schema"] is None:
+            return self.spark.read.parquet(self._vdir(v))
+        schema = T.StructType.fromJson(m["schema"])
+        return self.spark.read.schema(schema).parquet(*self._paths(m))
 
 
 class SnapshotArtifact:
@@ -203,8 +379,6 @@ class SnapshotArtifact:
         uncommitted (crashed) dirs, and clear legacy rename-swap debris.
         Pure cleanup — the commit already happened; crashing anywhere in
         here leaves a readable artifact and a re-runnable cleanup."""
-        import shutil
-
         if self._vt.latest_version() is None:
             return
         for name in os.listdir(self.path):
@@ -302,7 +476,6 @@ class PartitionedVersionedTable:
         renamed into the manifest layout and committed. Rows with a NULL
         partition value land in the ``__HIVE_DEFAULT_PARTITION__``
         bucket, not on the floor."""
-        import shutil
         from urllib.parse import unquote
 
         next_v = (self.versions()[-1] if self.versions() else 0) + 1
@@ -429,7 +602,6 @@ class PartitionedVersionedTable:
         # manifest layout.  A touched partition with no surviving and
         # no updated rows simply emits no directory and drops out of
         # the manifest.
-        import shutil
         from urllib.parse import unquote
 
         held_paths = [
@@ -482,8 +654,6 @@ class PartitionedVersionedTable:
         ``keep_last`` must be >= 1: a zero/negative window would compute
         an empty keep set and delete every manifest plus all generation
         data — total table loss from a plausible-looking argument."""
-        import shutil
-
         if keep_last < 1:
             raise ValueError(
                 f"vacuum(keep_last={keep_last}): must keep at least the "

@@ -202,3 +202,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _release_scoped_caches():
+    """Release every scope-tracked persist after each test, so a test
+    that fails mid-query cannot leave its persists behind for the next
+    test's storage accounting."""
+    yield
+    from oxidsql_spark.cachescope import release_scoped_caches
+
+    release_scoped_caches()

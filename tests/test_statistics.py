@@ -275,6 +275,45 @@ def test_stats_checkpoint_survives_reopen_without_rescan(spark, tmp_path):
         OnlineTableStats.rebuild = orig_rebuild
 
 
+def test_stats_blob_trimmed_and_round_trips_exactly(spark):
+    """The stats checkpoint drops all-zero trailing rho columns and
+    narrows the counters, yet restores ndv, rowcount, sample and the
+    counter matrices exactly; a blob in the older full-int64 format
+    still loads."""
+    import pickle
+
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from oxidsql_spark.statistics import OnlineTableStats
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("g", T.StringType())]
+    )
+    st = OnlineTableStats(spark, schema)
+    st.update(spark.range(20_000).selectExpr("id AS k", "cast(id % 7 AS string) AS g"))
+    st.add_rows([(-1, "pending")])
+    full_bytes = sum(sk._counts.nbytes for sk in st._sketches.values())
+    blob = st.dumps()
+    assert len(blob) < full_bytes / 4
+
+    old = pickle.loads(blob)
+    old["sketches"] = {
+        c: (sk.m, sk._counts.tobytes()) for c, sk in st._sketches.items()
+    }
+    counts = {c: sk._counts.copy() for c, sk in st._sketches.items()}
+    sample, pending = list(st._sample), list(st._pending)
+    ndv = (st.ndv("k"), st.ndv("g"))  # folds the pending row in
+    for data in (blob, pickle.dumps(old)):
+        back = OnlineTableStats.loads(spark, schema, data)
+        for c, want in counts.items():
+            assert back._sketches[c]._counts.dtype == np.int64
+            assert np.array_equal(back._sketches[c]._counts, want)
+        assert back._sample == sample and back._pending == pending
+        assert back.rowcount == 20_001
+        assert (back.ndv("k"), back.ndv("g")) == ndv
+
+
 def test_table_sample_close_releases_cache(spark, sf_dir):
     from oxidsql_spark.sources import table
     from oxidsql_spark.statistics import TableSample

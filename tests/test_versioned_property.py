@@ -1,7 +1,7 @@
 """Property-based check of VersionedTable: a random sequence of
-write / upsert / delete / rollback operations must match an in-memory
-dict model at every step, and time travel must reproduce every recorded
-historical state.
+write / upsert / append / delete / rollback operations must match an
+in-memory dict model at every step, and time travel must reproduce every
+recorded historical state.
 
 Mirrors the reference's seeded-randomized statistics tests
 (sampling.rs:558-832 discipline: determinism first), applied to the
@@ -24,6 +24,14 @@ _OPS = st.lists(
         st.tuples(st.just("upsert"), st.dictionaries(_KEYS, _VALS, min_size=1, max_size=4)),
         st.tuples(st.just("delete_ge"), _VALS),
         st.tuples(st.just("rollback_latest_minus"), st.integers(0, 2)),
+        # append new keys: driver-written tail (True) or a Spark write
+        st.tuples(
+            st.just("append"),
+            st.tuples(
+                st.dictionaries(st.integers(10, 19), _VALS, min_size=1, max_size=3),
+                st.booleans(),
+            ),
+        ),
     ),
     min_size=1,
     max_size=6,
@@ -31,7 +39,10 @@ _OPS = st.lists(
 
 
 def _read_model(vt: VersionedTable, version=None) -> dict[int, int]:
-    return {r.k: r.v for r in vt.read(version).collect()}
+    rows = vt.read(version).collect()
+    out = {r.k: r.v for r in rows}
+    assert len(out) == len(rows), "duplicate keys"
+    return out
 
 
 @settings(
@@ -57,6 +68,13 @@ def test_versioned_matches_model(spark, tmp_path_factory, ops):
 
             vt.delete_where(F.col("v") >= arg)
             model = {k: v for k, v in model.items() if v < arg}
+        elif op == "append":
+            rows = sorted((k, v) for k, v in arg[0].items() if k not in model)
+            if arg[1]:
+                vt.append_rows(rows)
+            else:
+                vt.append(spark.createDataFrame(rows, "k long, v long"))
+            model.update(rows)
         else:  # rollback_latest_minus
             versions = vt.versions()
             target = versions[max(0, len(versions) - 1 - arg)]
