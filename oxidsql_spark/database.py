@@ -322,8 +322,8 @@ class OxidSparkDatabase:
         os.replace(tmp, p)
 
     def _stats_rebuild(self, name: str) -> None:
-        """Delete/update path: plain HLL can't subtract (the reference's
-        CountingHLL can, counting_hyperloglog.rs:76-180) — re-derive."""
+        """MERGE path: re-derive the table's statistics from a rescan
+        (UPDATE/DELETE fold signed deltas instead, ``fold_dml``)."""
         if name in self._stats:
             self._stats[name].rebuild(self.spark.table(name))
 
@@ -1568,14 +1568,18 @@ class OxidSparkDatabase:
             # buffered path: the view is always base ∪ one local batch of
             # every buffered row — the plan stays 2 nodes deep no matter
             # how many single-row inserts arrive (the old shape built an
-            # N-deep union chain whose analysis cost grew per statement)
+            # N-deep union chain whose analysis cost grew per statement);
+            # the batch is an Arrow LocalRelation, so reads of it run no
+            # Python stage
+            from .versioned import local_frame
+
             buf = self._row_buf.setdefault(name, [])
             buf.extend(rows)
             base = self._view_base[name]
             schema = T.StructType(
                 [T.StructField(c.name, c.spark_type, True) for c in specs]
             )
-            batch = self.spark.createDataFrame(buf, schema)
+            batch = local_frame(self.spark, buf, schema)
             base.union(batch).createOrReplaceTempView(name)
         # online stats: the inserted rows are driver-known — buffered
         # accumulation, zero extra jobs here (heap.rs:245-292 twin)
@@ -1664,7 +1668,26 @@ class OxidSparkDatabase:
     # is rewrite: recompute the surviving/updated rows declaratively and
     # swap the view. At 100 TB the same shape becomes a partition-scoped
     # overwrite (dynamic partitionOverwriteMode) or a Delta/Iceberg
-    # MERGE — the SQL surface stays identical.
+    # MERGE — the SQL surface stays identical.  Statistics follow each
+    # statement without a rescan of the untouched rows: one signed
+    # aggregation over the touched slice (``OnlineTableStats.fold_dml``).
+
+    @staticmethod
+    def _require_deterministic(df: DataFrame, cond: str, post: dict | None = None) -> None:
+        """Refuse a nondeterministic WHERE or SET expression (checked on
+        the analyzed plan): the rewrite, the statistics fold and — in
+        memory — every later read of the lazily swapped view would each
+        draw different rows or values."""
+        plans = [df.filter(f"coalesce(({cond}), false)")]
+        if post:
+            plans.append(df.select(*post.values()))
+        for p in plans:
+            exprs = p._jdf.queryExecution().analyzed().expressions()
+            if not all(exprs.apply(i).deterministic() for i in range(exprs.size())):
+                raise AnalyzerError(
+                    "nondeterministic WHERE or SET expression: UPDATE and DELETE "
+                    "must pick the same rows and values on every evaluation"
+                )
 
     def _delete(self, stmt: str) -> None:
         m = _DELETE_RE.match(stmt)
@@ -1672,15 +1695,18 @@ class OxidSparkDatabase:
         if name not in self._tables:
             raise AnalyzerError(f"unknown table '{name}'")
         df = self.spark.table(name)
-        # standard DELETE: only rows where the predicate is TRUE go away;
-        # NULL-predicate rows survive
-        deleted = df.filter(f"coalesce(({where}), false)") if where else df
-        remaining = df.filter(f"NOT coalesce(({where}), false)") if where else df.limit(0)
-        # subtract the deleted rows' counts from the counting sketches
-        # BEFORE the view swap (the heap.rs:296-311 decrement path) —
-        # stats stay fresh with no rescan of the surviving table
-        if name in self._stats:
-            self._stats[name].delete_batch(deleted)
+        if where:
+            self._require_deterministic(df, where)
+            # subtract the deleted rows' counts BEFORE the view swap (the
+            # heap.rs:296-311 decrement path), then keep the rest —
+            # standard DELETE: only rows where the predicate is TRUE go
+            # away; NULL-predicate rows survive
+            self._stats[name].fold_dml(df, name, where)
+            remaining = df.filter(f"NOT coalesce(({where}), false)")
+        else:
+            # DELETE without WHERE / TRUNCATE: empty stats, nothing to fold
+            self._stats[name].reset()
+            remaining = df.limit(0)
         self._commit(name, remaining)
         self._save_stats(name)
         return None
@@ -1701,18 +1727,13 @@ class OxidSparkDatabase:
             assignments[col] = expr.strip()
         df = self.spark.table(name)
         cond = where if where else "true"
-        from pyspark.sql import functions as F  # local to keep header lean
-
-        def apply_sets(rows: DataFrame) -> DataFrame:
-            return rows.select(
-                *[
-                    F.expr(assignments[c.name]).cast(c.spark_type).alias(c.name)
-                    if c.name in assignments
-                    else F.col(c.name)
-                    for c in specs
-                ]
-            )
-
+        # each SET column's post-image, cast to the column type
+        post = {
+            c.name: F.expr(assignments[c.name]).cast(c.spark_type)
+            for c in specs
+            if c.name in assignments
+        }
+        self._require_deterministic(df, cond, post)
         if re.search(r"\(\s*select\b", cond, re.IGNORECASE):
             # Subquery predicate (IN / EXISTS, possibly correlated):
             # Catalyst only resolves subquery expressions under Filter,
@@ -1721,34 +1742,22 @@ class OxidSparkDatabase:
             # are unordered, so the union is semantics-preserving)
             matched = df.filter(f"coalesce(({cond}), false)")
             untouched = df.filter(f"NOT coalesce(({cond}), false)")
-            updated = apply_sets(matched).unionByName(untouched)
+            updated = matched.select(
+                *[post.get(c.name, F.col(c.name)).alias(c.name) for c in specs]
+            ).unionByName(untouched)
         else:
             updated = df.select(
                 *[
-                    F.when(F.expr(cond), F.expr(assignments[c.name]).cast(c.spark_type))
-                    .otherwise(F.col(c.name))
-                    .alias(c.name)
-                    if c.name in assignments
+                    F.when(F.expr(cond), post[c.name]).otherwise(F.col(c.name)).alias(c.name)
+                    if c.name in post
                     else F.col(c.name)
                     for c in specs
                 ]
             )
-        # stats: UPDATE = subtract the touched slice's pre-image counts,
-        # add its post-image counts (heap.rs:296-345's update path pairs
-        # a delete-side and an insert-side sketch adjustment) — touches
-        # only the affected rows, never rescans the table
-        if name in self._stats:
-            touched = df.filter(f"coalesce(({cond}), false)")
-            touched_post = touched.select(
-                *[
-                    F.expr(assignments[c.name]).cast(c.spark_type).alias(c.name)
-                    if c.name in assignments
-                    else F.col(c.name)
-                    for c in specs
-                ]
-            )
-            self._stats[name].delete_batch(touched)
-            self._stats[name].update(touched_post)
+        # stats: the touched slice's pre-image out, its post-image in
+        # (heap.rs:296-345's update path pairs a delete-side and an
+        # insert-side sketch adjustment), in one aggregation
+        self._stats[name].fold_dml(df, name, cond, post)
         self._commit(name, updated)
         self._save_stats(name)
         return None

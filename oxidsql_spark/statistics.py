@@ -14,13 +14,23 @@ Reference machinery → Spark twin:
   → ``TableSample``: a seeded ``df.sample`` materialized once (cheap at
   any scale — the sample is tiny and reusable), with
   ``estimate_selectivity`` reproducing the estimate = matching/total,
-  floored at base/(2·SAMPLE_SIZE) and 1 (bottomup.rs:159-161).
+  floored at base/(2·SAMPLE_SIZE) and 1 (bottomup.rs:159-161);
+* the same counters and sample kept fresh by every INSERT, UPDATE and
+  DELETE without a rescan (heap.rs:245-311)
+  → ``OnlineTableStats``: buffered INSERT rows fold through an Arrow
+  ``LocalRelation`` with zero jobs, an UPDATE or DELETE folds one signed
+  aggregation over its touched slice, and the sample answers
+  ``estimate_cardinality`` as a ``LocalRelation`` — no Python stage on
+  any path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .versioned import local_frame
 
 SAMPLE_SIZE = 1024  # the reference's SAMPLE_SIZE (catalog/mod.rs:37)
 SAMPLE_SEED = 42
@@ -170,7 +180,8 @@ class CountingHLL:
         return 0.709 if self.m == 64 else 0.7213 / (1 + 1.079 / self.m)
 
     def add_counts(self, rows, sign: int = 1) -> None:
-        """Fold (bucket, rho, count) rows in; ``sign=-1`` deletes.
+        """Fold (bucket, rho, count) rows in; a negative count or
+        ``sign=-1`` deletes.
         Deleting values never inserted clamps at 0 (the reference's
         decrement assumes tracked inserts, counting_hyperloglog.rs:117)."""
         for bucket, rho, cnt in rows:
@@ -196,45 +207,64 @@ class CountingHLL:
         return int(round(est))
 
 
+_U64 = (1 << 64) - 1
+
+
+def _bucket_rho(h: int, m: int) -> tuple[int, int]:
+    """The driver-side twin of the (bucket, rho) split ``_signed_counts``
+    computes in Spark, for one signed 64-bit ``xxhash64`` value: bucket
+    = the low log2(m) bits, rho = the leading-zero rank of the rest
+    (65 - bits - bit_length of the unsigned shifted hash)."""
+    bits = m.bit_length() - 1
+    return h & (m - 1), 65 - bits - ((h & _U64) >> bits).bit_length()
+
+
+def _value_hash(c: str) -> Column:
+    """The hash every CountingHLL counter is keyed on:
+    ``xxhash64(cast(c AS string))``, NULL where the value is NULL
+    (``xxhash64`` alone would hash a NULL to its seed)."""
+    return F.when(F.col(c).isNotNull(), F.xxhash64(F.col(c).cast("string")))
+
+
+def _signed_counts(
+    df: DataFrame, stacked: list[tuple[str, Column, int]], m: int
+) -> dict[str, list[tuple[int, int, int]]]:
+    """ONE aggregation over ``df``: every ``(name, value, sign)`` entry
+    stacks a row per input row, NULL values are skipped, and the rows
+    are summed by sign per (name, bucket, rho).  At most
+    len(stacked)×m×max_rho groups survive map-side combine."""
+    from itertools import chain
+
+    bits = m.bit_length() - 1
+    rows = df.select(
+        F.stack(
+            F.lit(len(stacked)),
+            *chain(*[(F.lit(c), v.cast("string"), F.lit(sign)) for c, v, sign in stacked]),
+        ).alias("c", "v", "s")
+    ).filter(F.col("v").isNotNull())
+    h = F.xxhash64("v")
+    w = F.shiftrightunsigned(h, bits)
+    rho = F.when(w == 0, F.lit(65 - bits)).otherwise(F.lit(65 - bits) - F.length(F.bin(w)))
+    counted = (
+        rows.groupBy("c", h.bitwiseAND(F.lit(m - 1)).alias("bucket"), rho.alias("rho"))
+        .agg(F.sum("s").alias("n"))
+        .collect()
+    )
+    out: dict[str, list[tuple[int, int, int]]] = {c: [] for c, _, _ in stacked}
+    for r in counted:
+        out[r["c"]].append((int(r["bucket"]), int(r["rho"]), int(r["n"])))
+    return out
+
+
 def column_bucket_rho_counts(
     batch: DataFrame, cols: list[str], m: int = 64
 ) -> dict[str, list[tuple[int, int, int]]]:
     """One exact mini-aggregation producing CountingHLL input for every
     column at once: stack the columns, hash, split into (bucket, rho),
     count. NULLs are skipped per column (distinct-count semantics).
-    The synthetic ``__rows__`` column counts batch rows in the same job.
-    Shuffle volume ≤ (ncols+1)×m×max_rho rows after partial agg."""
-    from itertools import chain
-
-    bits = m.bit_length() - 1
-    stacked = batch.select(
-        F.stack(
-            F.lit(len(cols) + 1),
-            *chain(*[(F.lit(c), F.col(c).cast("string")) for c in cols]),
-            F.lit("__rows__"),
-            F.lit("x"),
-        ).alias("c", "v")
-    ).filter(F.col("v").isNotNull())
-    h = F.xxhash64("v")
-    w = F.expr(f"shiftrightunsigned(xxhash64(v), {bits})")
-    max_rho = 64 - bits + 1
-    rho = F.when(w == 0, F.lit(max_rho)).otherwise(
-        F.lit(64 - bits + 1) - F.length(F.expr(f"bin(shiftrightunsigned(xxhash64(v), {bits}))"))
-    )
-    counted = (
-        stacked.groupBy(
-            F.col("c"),
-            h.bitwiseAND(F.lit(m - 1)).alias("bucket"),
-            rho.alias("rho"),
-        )
-        .count()
-        .collect()
-    )
-    out: dict[str, list[tuple[int, int, int]]] = {c: [] for c in cols}
-    out["__rows__"] = []
-    for r in counted:
-        out[r["c"]].append((int(r["bucket"]), int(r["rho"]), int(r["count"])))
-    return out
+    The synthetic ``__rows__`` column counts batch rows in the same job."""
+    stacked = [(c, F.col(c), 1) for c in cols] + [("__rows__", F.lit("x"), 1)]
+    return _signed_counts(batch, stacked, m)
 
 
 class OnlineTableStats:
@@ -250,18 +280,33 @@ class OnlineTableStats:
 
     * cardinality counter → a running count fed by each batch;
     * CountingHLL per column (counting_hyperloglog.rs:76-180) →
-      ``CountingHLL`` above: Spark aggregates exact (bucket, rho)
-      counts per batch (``column_bucket_rho_counts``), the driver keeps
-      the counter matrix. Inserts ADD counts, deletes SUBTRACT them —
-      the reference sketch's defining delete capability — so neither
-      path rescans the table. m=1024 buckets (same structure as the
-      reference's m=64; we are not byte-budgeted, and 1024 buckets puts
-      the rsd at ~3%, exact-ish in the linear-counting range);
+      ``CountingHLL`` above, the driver keeps the counter matrix. Inserts
+      ADD counts, deletes SUBTRACT them — the reference sketch's defining
+      delete capability — so no path rescans the table. m=1024 buckets
+      (same structure as the reference's m=64; we are not byte-budgeted,
+      and 1024 buckets puts the rsd at ~3%, exact-ish in the
+      linear-counting range);
     * 1024-row reservoir (heap.rs:258-289) → bottom-k sample: rows carry
       a hash priority, the k smallest survive; merging a batch is
       union-and-keep-k-smallest. Statistically a uniform sample like a
       reservoir, but mergeable across batches and executors — the form
-      that still works when ingest itself is distributed."""
+      that still works when ingest itself is distributed.
+
+    What each statement costs:
+
+    * INSERT … VALUES (``add_rows``) → buffered; the next stats read
+      folds the buffer through an Arrow ``LocalRelation``: Spark computes
+      every value hash and priority in a projection the optimizer folds
+      into the plan, the driver splits the hashes into (bucket, rho) —
+      zero jobs;
+    * INSERT … SELECT (``update``) → one counting aggregation over the
+      batch, one bounded top-k for the sample;
+    * UPDATE / DELETE (``fold_dml``) → ONE signed aggregation over the
+      touched slice (pre-image −1, UPDATE's post-image +1); the
+      statement's own predicate and SET expressions run over the
+      ≤1024 sample rows as a ``LocalRelation`` — zero jobs for plain
+      predicates;
+    * DELETE without WHERE / TRUNCATE (``reset``) → driver only."""
 
     NDV_M = 1024  # CountingHLL buckets (reference uses 64; see above)
 
@@ -279,45 +324,126 @@ class OnlineTableStats:
         """Driver-known tiny batches (INSERT … VALUES): buffer and fold
         lazily. The reference's per-insert maintenance is an in-memory
         nanosecond update (heap.rs:245-292); the Spark-faithful cost
-        model is therefore ZERO jobs on the insert path, one amortized
-        job at the next stats read — not three jobs per row."""
+        model is therefore ZERO jobs on the insert path and zero at the
+        next stats read (``_flush``)."""
         self._pending.extend(rows)
         self.rowcount += len(rows)
 
-    def _flush(self) -> None:
-        if self._pending:
-            rows, self._pending = self._pending, []
-            self.rowcount -= len(rows)  # update() re-counts them
-            self.update(self.spark.createDataFrame(rows, self.schema))
+    def _priority(self) -> Column:
+        """Bottom-k sample priority of a row: a hash of its values salted
+        by its ingest position."""
+        return F.xxhash64(
+            *[F.col(c).cast("string") for c in self.schema.names],
+            F.lit(self._seq) + F.monotonically_increasing_id(),
+        )
 
-    def _fold_counts(self, batch: DataFrame, sign: int) -> int:
-        """Shared insert/delete sketch maintenance: one exact counting
-        job over the batch, then driver-local matrix arithmetic."""
-        cols = [f.name for f in self.schema.fields]
-        counts = column_bucket_rho_counts(batch, cols, m=self.NDV_M)
-        for c in cols:
-            if c not in self._sketches:
-                self._sketches[c] = CountingHLL(self.NDV_M)
-            self._sketches[c].add_counts(counts[c], sign=sign)
-        return sum(cnt for _, _, cnt in counts["__rows__"])
+    def _add_counts(self, counts: dict[str, list[tuple[int, int, int]]]) -> None:
+        for c in self.schema.names:
+            self._sketches.setdefault(c, CountingHLL(self.NDV_M)).add_counts(counts.get(c, []))
+
+    def _merge_sample(self, rows: list[tuple[int, tuple]]) -> None:
+        self._sample = sorted(self._sample + rows, key=lambda t: t[0])[: self.sample_size]
+
+    def _flush(self) -> None:
+        """Fold the buffered rows in with NO Spark job: one projection
+        over their ``LocalRelation`` (values, per-column value hashes,
+        priority) that the optimizer evaluates while planning, then
+        driver-local counter arithmetic.  Spark computes every hash, so
+        the counters equal ``column_bucket_rho_counts``'s."""
+        if not self._pending:
+            return
+        rows, self._pending = self._pending, []
+        cols = self.schema.names
+        n = len(cols)
+        got = (
+            local_frame(self.spark, rows, self.schema)
+            .select(
+                *cols,
+                *[_value_hash(c).alias(f"__h{i}__") for i, c in enumerate(cols)],
+                self._priority().alias("__prio__"),
+            )
+            .collect()
+        )
+        self._add_counts(
+            {
+                c: [(*_bucket_rho(r[n + i], self.NDV_M), 1) for r in got if r[n + i] is not None]
+                for i, c in enumerate(cols)
+            }
+        )
+        self._merge_sample([(r[-1], tuple(r[:n])) for r in got])
+        self._seq += len(rows)
 
     def update(self, batch: DataFrame) -> None:
         """Fold one inserted batch in: one exact counting job over the
         batch (rowcount + per-column (bucket, rho) counts in a single
         aggregation), one bounded top-k job for the sample."""
-        cols = [f.name for f in self.schema.fields]
-        n = self._fold_counts(batch, sign=1)
+        cols = self.schema.names
+        counts = column_bucket_rho_counts(batch, cols, m=self.NDV_M)
+        self._add_counts(counts)
+        n = sum(cnt for _, _, cnt in counts["__rows__"])
         if n == 0:
             return
-        prio = F.xxhash64(
-            *[F.col(c).cast("string") for c in cols],
-            F.lit(self._seq) + F.monotonically_increasing_id(),
-        )
+        prio = self._priority()
         cand = batch.withColumn("__prio__", prio).orderBy("__prio__").limit(self.sample_size)
-        rows = [(r["__prio__"], tuple(r[c] for c in cols)) for r in cand.collect()]
-        self._sample = sorted(self._sample + rows, key=lambda t: t[0])[: self.sample_size]
+        self._merge_sample([(r["__prio__"], tuple(r[c] for c in cols)) for r in cand.collect()])
         self._seq += n
         self.rowcount += n
+
+    def fold_dml(
+        self, table: DataFrame, alias: str, cond: str, post: dict[str, Column] | None = None
+    ) -> None:
+        """Fold a DELETE (``post`` None) or an UPDATE (``post`` = each SET
+        column's post-image expression, cast to the column type) whose
+        predicate is ``cond``, before ``table`` (the table's current
+        content, addressable as ``alias``) is rewritten.
+
+        Counters: ONE signed aggregation over the touched slice
+        ``table.filter(coalesce(cond, false))``. DELETE subtracts every
+        column and ``__rows__`` (the heap.rs:296-311 decrement path); UPDATE
+        subtracts only the SET columns' pre-image and adds their
+        post-image.  A value deleted while duplicates remain keeps its
+        register alive (its counter stays positive) — exactly the
+        property max-register HLLs cannot provide.
+
+        Sample: the same predicate and SET expressions run over the
+        sample rows as a ``LocalRelation`` aliased like the table (so
+        correlated and IN/EXISTS subquery predicates resolve); DELETE
+        drops the hit rows, UPDATE rewrites them in place and keeps their
+        priority.  NULL-bearing rows match like any other — no equality
+        join is involved."""
+        self._flush()
+        cols = self.schema.names
+        hit = F.expr(f"coalesce(({cond}), false)")
+        if post is None:
+            stacked = [(c, F.col(c), -1) for c in cols] + [("__rows__", F.lit("x"), -1)]
+        else:
+            stacked = [(c, F.col(c), -1) for c in post] + [(c, v, 1) for c, v in post.items()]
+        counts = _signed_counts(table.filter(hit), stacked, self.NDV_M)
+        hits = []
+        if self._sample:
+            schema = T.StructType(self.schema.fields + [T.StructField("__i__", T.LongType())])
+            indexed = [(*t, i) for i, (_, t) in enumerate(self._sample)]
+            rel = local_frame(self.spark, indexed, schema)
+            out = [F.col("__i__")]
+            if post is not None:
+                out += [post.get(c, F.col(c)).alias(c) for c in cols]
+            hits = rel.alias(alias).filter(hit).select(*out).collect()
+        self._add_counts(counts)
+        if post is None:
+            self.rowcount = max(0, self.rowcount + sum(n for _, _, n in counts["__rows__"]))
+            gone = {r[0] for r in hits}
+            self._sample = [t for i, t in enumerate(self._sample) if i not in gone]
+        else:
+            for r in hits:
+                self._sample[r[0]] = (self._sample[r[0]][0], tuple(r[1:]))
+
+    def reset(self) -> None:
+        """Empty statistics (DELETE without WHERE, TRUNCATE): driver only,
+        no fold of the whole table."""
+        self.rowcount = 0
+        self._sketches = {}
+        self._sample = []
+        self._pending = []
 
     def dumps(self) -> bytes:
         """Serialize the full stats state (counter matrices, sample,
@@ -374,46 +500,9 @@ class OnlineTableStats:
             self._sketches[c] = sk
         return self
 
-    def delete_batch(self, deleted: DataFrame) -> None:
-        """Fold a DELETE in by SUBTRACTING its (bucket, rho) counts —
-        the reference CountingHLL's decrement path
-        (counting_hyperloglog.rs:76-180 via heap.rs:296-311): no rescan
-        of the surviving table. A value deleted while duplicates remain
-        keeps its register alive (its counter stays positive) — exactly
-        the property max-register HLLs cannot provide. The sample drops
-        deleted rows by a NULL-SAFE anti-join (one job over the
-        ≤1024-row sample): plain column equality would never match rows
-        carrying a NULL, so deleted NULL-bearing rows would linger in
-        the sample and skew selectivity estimates."""
-        from functools import reduce
-
-        self._flush()
-        n = self._fold_counts(deleted, sign=-1)
-        if n == 0:
-            return
-        self.rowcount = max(0, self.rowcount - n)
-        if self._sample:
-            cols = [f.name for f in self.schema.fields]
-            sample_df = self.spark.createDataFrame(
-                [(p, *t) for p, t in self._sample],
-                ("__prio__ long, " + ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in self.schema.fields)),
-            )
-            cond = reduce(
-                lambda a, b: a & b,
-                [sample_df[c].eqNullSafe(deleted[c]) for c in cols],
-            )
-            kept = sample_df.join(deleted, cond, "left_anti").collect()
-            self._sample = sorted(
-                ((r["__prio__"], tuple(r[c] for c in cols)) for r in kept),
-                key=lambda t: t[0],
-            )
-
     def rebuild(self, df: DataFrame) -> None:
-        """Full re-derivation from the table (recovery / UPDATE path)."""
-        self.rowcount = 0
-        self._sketches = {}
-        self._sample = []
-        self._pending = []
+        """Full re-derivation from the table (recovery / MERGE path)."""
+        self.reset()
         self.update(df)
 
     def ndv(self, col: str) -> int:
@@ -424,18 +513,22 @@ class OnlineTableStats:
         return sk.estimate() if sk is not None else 0
 
     def sample_df(self) -> DataFrame:
+        """The sample rows as a ``LocalRelation``."""
         self._flush()
-        return self.spark.createDataFrame([t for _, t in self._sample], self.schema)
+        return local_frame(self.spark, [t for _, t in self._sample], self.schema)
 
     def estimate_cardinality(self, predicate: Column | str) -> int:
         """Reference estimate + floor rule (bottomup.rs:121-161) over the
-        maintained sample — fresh after every INSERT, no ANALYZE step."""
+        maintained sample — fresh after every INSERT, no ANALYZE step.
+        The predicate filters the sample's ``LocalRelation`` and the
+        matches are collected, not counted (an aggregate is not folded
+        into the plan): zero jobs for a predicate without subqueries."""
         self._flush()
         total = len(self._sample)
         if total == 0:
             return max(self.rowcount, 1)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        matching = self.sample_df().filter(pred).count()
+        matching = len(self.sample_df().filter(pred).select(F.lit(1)).collect())
         est = matching / total * self.rowcount
         floor = self.rowcount / (2 * self.sample_size)
         return max(int(est), int(floor), 1)

@@ -72,13 +72,29 @@ def _refs(manifest: dict) -> list[str]:
     return manifest["files"] + ([manifest["tail"]] if manifest["tail"] else [])
 
 
-def _arrow_values(values, dtype: T.DataType):
-    """Python values as pyarrow takes them, with Spark's meaning: a naive
-    datetime in a TIMESTAMP column is local wall time (as in
-    ``createDataFrame``), not UTC."""
-    if isinstance(dtype, T.TimestampType):
-        return [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
-    return values
+def arrow_rows(rows: list[tuple], schema: T.StructType):
+    """Python tuples (column order, the values ``createDataFrame`` takes)
+    as a ``pa.Table`` of the Spark schema's Arrow types.  A naive
+    datetime in a TIMESTAMP column is local wall time, as in
+    ``createDataFrame``, not UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, f, a in zip(cols, schema.fields, arrow_schema):
+        if isinstance(f.dataType, T.TimestampType):
+            values = [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
+        arrays.append(pa.array(values, type=a.type))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-held rows as a DataFrame over a ``LocalRelation`` (built from
+    Arrow, not a Python RDD): projections and filters over it fold into
+    the plan, so collecting them runs no Spark job."""
+    return spark.createDataFrame(arrow_rows(rows, schema), schema)
 
 
 class VersionedTable:
@@ -209,24 +225,15 @@ class VersionedTable:
         ``spark.sql.files.maxPartitionBytes`` rolls into a base file."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         latest = self.latest_version()
         if latest is None:
             raise ValueError(f"append_rows into {self.path} before its first write")
         parent = self._manifest(latest)
         schema = self._schema(latest, parent)
-        arrow_schema = to_arrow_schema(schema)
-        cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
-        batch = pa.Table.from_arrays(
-            [
-                pa.array(_arrow_values(c, f.dataType), type=a.type)
-                for c, f, a in zip(cols, schema.fields, arrow_schema)
-            ],
-            schema=arrow_schema,
-        )
+        batch = arrow_rows(rows, schema)
         if parent["tail"]:
-            old = pq.read_table(os.path.join(self.path, parent["tail"]), schema=arrow_schema)
+            old = pq.read_table(os.path.join(self.path, parent["tail"]), schema=batch.schema)
             batch = pa.concat_tables([old, batch])
         v, vdir = self._next()
         os.makedirs(vdir)
